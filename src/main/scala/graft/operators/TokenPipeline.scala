@@ -1,7 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.TimeUnit
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, IntervalUtils}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 import graft.schema.NearSchemas
 
 /** The full token-transfer / token-balance dataflow, re-expressed Spark-first.
@@ -12,17 +18,25 @@ import graft.schema.NearSchemas
   *   decode + fan-out into 0–2 double-entry transfer legs → (a) transfer sink,
   *   (b) group-by affected account → fold into per-account running balances.
   *
-  * Every stage is a pure `DataFrame => DataFrame`, so the identical plan runs in
-  * batch mode (tests, backfill/replay — the reference's application-reset path,
-  * README.md:199-205) and under Structured Streaming (see graft.streaming).
+  * Every stage is a pure `DataFrame => DataFrame`. The end-to-end entry points
+  * (`transfersFromRaw`, `multiTokenBalancesFromRaw`) dispatch once on
+  * `isStreaming` for dedup + joins and share everything after:
+  *   - batch (tests, backfill/replay — the reference's application-reset path,
+  *     README.md:199-205): `Dedup.exact` ×3 and two Catalyst joins ([[joined]]);
+  *   - streaming (see graft.streaming): ONE keyed stateful operator on
+  *     `receipt_id` ([[keyedJoin]]) that dedups the three topics and applies
+  *     both ±tolerance conditions, emitting the same rows as [[joined]].
+  * The filter, fan-out and balance fold are the same code in both modes.
   *
   * Scale notes: the joins are equi-joins on `receipt_id` — at 100 TB these are
   * shuffle hash/sort-merge joins co-partitioned on the key across all three
-  * inputs, with the time predicate applied post-match (no cross product). The
-  * filter and column pruning are pushed below the joins by Catalyst, which the
-  * reference applies only *after* joining (TokenBalance.java:149-151) — our plan
-  * is strictly better. The balance fold is a commutative sum × argmax, so Spark's
-  * partial aggregation (map-side combine) applies; state is O(#accounts).
+  * inputs, with the time predicate applied post-match (no cross product); the
+  * streaming form is one shuffle on the same key. The filter and column
+  * pruning are pushed below the joins (by Catalyst in batch, before the union
+  * in streaming), which the reference applies only *after* joining
+  * (TokenBalance.java:149-151). The balance fold is a commutative sum × argmax,
+  * so Spark's partial aggregation (map-side combine) applies; state is
+  * O(#accounts).
   */
 object TokenPipeline {
 
@@ -41,20 +55,22 @@ object TokenPipeline {
 
   // ---------------------------------------------------------------- dedup (#3)
 
-  def dedupReceipts(df: DataFrame, cfg: Config): DataFrame = {
-    val withTime = df.withColumn("r_event_time", eventTime(col("included_in_block_timestamp")))
-    Dedup(withTime, "r_event_time", cfg.dedupDelay, Seq("receipt_id"))
-  }
+  private def receiptsTimed(df: DataFrame): DataFrame =
+    df.withColumn("r_event_time", eventTime(col("included_in_block_timestamp")))
+  private def outcomesTimed(df: DataFrame): DataFrame =
+    df.withColumn("o_event_time", eventTime(col("executed_in_block_timestamp")))
+  private def actionsTimed(df: DataFrame): DataFrame =
+    df.withColumn("a_event_time", eventTime(col("receipt_included_in_block_timestamp")))
 
-  def dedupOutcomes(df: DataFrame, cfg: Config): DataFrame = {
-    val withTime = df.withColumn("o_event_time", eventTime(col("executed_in_block_timestamp")))
-    Dedup(withTime, "o_event_time", cfg.dedupDelay, Seq("receipt_id"))
-  }
+  def dedupReceipts(df: DataFrame, cfg: Config): DataFrame =
+    Dedup(receiptsTimed(df), "r_event_time", cfg.dedupDelay, Seq("receipt_id"))
 
-  def dedupActions(df: DataFrame, cfg: Config): DataFrame = {
-    val withTime = df.withColumn("a_event_time", eventTime(col("receipt_included_in_block_timestamp")))
-    Dedup(withTime, "a_event_time", cfg.dedupDelay, Seq("receipt_id", "index_in_action_receipt"))
-  }
+  def dedupOutcomes(df: DataFrame, cfg: Config): DataFrame =
+    Dedup(outcomesTimed(df), "o_event_time", cfg.dedupDelay, Seq("receipt_id"))
+
+  def dedupActions(df: DataFrame, cfg: Config): DataFrame =
+    Dedup(actionsTimed(df), "a_event_time", cfg.dedupDelay,
+      Seq("receipt_id", "index_in_action_receipt"))
 
   // ------------------------------------------------------- interval joins (#4, #5)
 
@@ -64,25 +80,16 @@ object TokenPipeline {
     * idiom and let Catalyst prune).
     *
     * Inputs must already carry `r_event_time` / `o_event_time` / `a_event_time`
-    * (the dedup stages add them); under streaming they must also be watermarked.
+    * (the dedup stages add them). This is the batch form; streams take
+    * [[keyedJoin]].
     */
   def joined(receipts: DataFrame, outcomes: DataFrame, actions: DataFrame,
              cfg: Config): DataFrame = {
     val tol = expr(s"INTERVAL ${cfg.joinToleranceMs} MILLISECONDS")
 
-    val r = receipts.select(
-      col("receipt_id"), col("included_in_block_hash"), col("included_in_chunk_hash"),
-      col("index_in_chunk"), col("included_in_block_timestamp"),
-      col("predecessor_account_id"), col("receiver_account_id"),
-      col("originated_from_transaction_hash"), col("r_event_time"))
-
-    val o = outcomes.select(
-      col("receipt_id").as("o_receipt_id"), col("gas_burnt"), col("tokens_burnt"),
-      col("executor_account_id"), col("status"), col("shard_id"), col("o_event_time"))
-
-    val a = actions.select(
-      col("receipt_id").as("a_receipt_id"), col("index_in_action_receipt"),
-      col("action_kind"), col("args"), col("a_event_time"))
+    val r = receipts.select(ReceiptCols.map(col): _*)
+    val o = outcomes.select(col("receipt_id").as("o_receipt_id") +: OutcomeCols.map(col): _*)
+    val a = actions.select(col("receipt_id").as("a_receipt_id") +: ActionCols.map(col): _*)
 
     r.join(o,
         col("receipt_id") === col("o_receipt_id") &&
@@ -94,6 +101,131 @@ object TokenPipeline {
         col("a_event_time") <= col("r_event_time") + tol)
       .drop("o_receipt_id", "a_receipt_id")
   }
+
+  /** The columns each side contributes to the joined record, in output order. */
+  private val ReceiptCols = Seq("receipt_id", "included_in_block_hash",
+    "included_in_chunk_hash", "index_in_chunk", "included_in_block_timestamp",
+    "predecessor_account_id", "receiver_account_id",
+    "originated_from_transaction_hash", "r_event_time")
+  private val OutcomeCols = Seq("gas_burnt", "tokens_burnt", "executor_account_id",
+    "status", "shard_id", "o_event_time")
+  private val ActionCols = Seq("index_in_action_receipt", "action_kind", "args",
+    "a_event_time")
+
+  // ------------------------------------------ streaming: one keyed state (#3–#5)
+
+  /** The streaming form of dedup ×3 + the two ±tolerance joins: ONE
+    * `flatMapGroupsWithState` keyed by `receipt_id` over a tagged union of
+    * the three topics, emitting exactly the rows of [[joined]].
+    *
+    * Per key the state holds the first receipt, the first outcome and the
+    * first action per `index_in_action_receipt` — keep-first dedup, exact
+    * because redeliveries are verbatim copies (at-least-once CDC). A
+    * (receipt, outcome, action) triple is emitted once, in the trigger where
+    * the last of its three parts arrives, iff the outcome and the action both
+    * lie within ±`joinToleranceMs` of the receipt. Each side's filter
+    * predicate is applied before the union (`receiptGate`, non-FAILURE,
+    * FUNCTION_CALL — the ones [[transfersFiltered]] applies after the join),
+    * so state only holds rows that can produce a transfer leg.
+    *
+    * Every input keeps its own `withWatermark(<x>_event_time, dedupDelay)`, so
+    * Spark's min-of-inputs watermark policy holds and rows older than the
+    * watermark are dropped before they reach state. Catalyst pushes the side
+    * predicates below the watermark, so an input's watermark follows the rows
+    * that can produce a leg; a slower watermark only holds state longer. A
+    * key times out at its max event time + `dedupDelay` (never earlier than
+    * watermark + 1); the timeout drops its state and emits nothing — the
+    * dedup horizon of the batch-shaped plan, and the bound on state.
+    *
+    * Why one operator: Structured Streaming loads and commits every stateful
+    * operator's store for every partition on every trigger. The dedup+join
+    * composition had 5 stateful operators (each join with 4 stores per
+    * partition), so at 4 partitions a trigger committed 44 stores whatever
+    * its row count, plus 4 shuffles; this plan commits 1 store per partition
+    * behind 1 shuffle.
+    */
+  private def keyedJoin(receipts: DataFrame, outcomes: DataFrame, actions: DataFrame,
+                        cfg: Config, receiptGate: Column): DataFrame = {
+    def side(timed: DataFrame, timeCol: String, keep: Column, tag: String,
+             cols: Seq[String]): DataFrame =
+      timed.withWatermark(timeCol, cfg.dedupDelay)
+        .filter(keep)
+        .select(col("receipt_id"), col(timeCol).as("event_time"),
+          struct(cols.map(col): _*).as(tag))
+
+    val tagged = side(receiptsTimed(receipts), "r_event_time", receiptGate, "r", ReceiptCols)
+      .unionByName(side(outcomesTimed(outcomes), "o_event_time",
+        col("status") =!= "FAILURE", "o", OutcomeCols), allowMissingColumns = true)
+      .unionByName(side(actionsTimed(actions), "a_event_time",
+        col("action_kind") === "FUNCTION_CALL", "a", ActionCols), allowMissingColumns = true)
+
+    val Seq(rType, oType, aType) = Seq("r", "o", "a").map(tagged.schema(_).dataType)
+    val stateSchema = StructType(Seq(
+      StructField("r", rType), StructField("o", oType),
+      StructField("a", ArrayType(aType, containsNull = false)),
+      StructField("max_event_ms", LongType, nullable = false)))
+    val outSchema = StructType(Seq(rType, oType, aType).flatMap(_.asInstanceOf[StructType].fields))
+    val rTime = ReceiptCols.indexOf("r_event_time")
+    val oTime = OutcomeCols.indexOf("o_event_time")
+    val aTime = ActionCols.indexOf("a_event_time")
+    val tolMicros = cfg.joinToleranceMs * 1000L
+    val delayMs = IntervalUtils.getDuration(
+      IntervalUtils.fromIntervalString(cfg.dedupDelay), TimeUnit.MILLISECONDS, 31)
+
+    def micros(row: Row, i: Int): Long = DateTimeUtils.fromJavaTimestamp(row.getTimestamp(i))
+
+    def process(key: String, rows: Iterator[Row], state: GroupState[Row]): Iterator[Row] =
+      if (state.hasTimedOut) {
+        state.remove()
+        Iterator.empty
+      } else {
+        val prev = state.getOption
+        val r0 = prev.map(_.getStruct(0)).orNull
+        val o0 = prev.map(_.getStruct(1)).orNull
+        val a0 = prev.map(_.getSeq[Row](2)).getOrElse(Seq.empty)
+        var (r, o) = (r0, o0)
+        val acts = scala.collection.mutable.LinkedHashMap.empty[Any, Row]
+        a0.foreach(a => acts(a.get(0)) = a)
+        var maxMs = prev.map(_.getLong(3)).getOrElse(Long.MinValue)
+        rows.foreach { in =>
+          maxMs = math.max(maxMs, in.getTimestamp(1).getTime)
+          if (!in.isNullAt(2)) { if (r == null) r = in.getStruct(2) }
+          else if (!in.isNullAt(3)) { if (o == null) o = in.getStruct(3) }
+          else { val a = in.getStruct(4); if (!acts.contains(a.get(0))) acts(a.get(0)) = a }
+        }
+        state.update(Row(r, o, acts.values.toSeq, maxMs))
+        state.setTimeoutTimestamp(math.max(maxMs + delayMs, state.getCurrentWatermarkMs() + 1))
+
+        def near(side: Row, i: Int): Boolean =
+          math.abs(micros(side, i) - micros(r, rTime)) <= tolMicros
+        if (r == null || o == null || !near(o, oTime)) Iterator.empty
+        else {
+          // a triple already complete before this trigger was emitted then
+          val seen: Any => Boolean =
+            if (r0 != null && o0 != null) a0.map(_.get(0)).toSet else _ => false
+          acts.valuesIterator
+            .filter(a => !seen(a.get(0)) && near(a, aTime))
+            .map(a => Row.fromSeq(r.toSeq ++ o.toSeq ++ a.toSeq))
+            .toList.iterator
+        }
+      }
+
+    tagged
+      .groupBy(col("receipt_id"))
+      .as[String, Row](Encoders.STRING, ExpressionEncoder(tagged.schema))
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(process)(
+        ExpressionEncoder(stateSchema), ExpressionEncoder(outSchema))
+      .toDF()
+  }
+
+  /** Dedup + joins for either shape: the keyed-state operator on streams, the
+    * batch dedup and Catalyst joins otherwise.
+    */
+  private def joinedFromRaw(receipts: DataFrame, outcomes: DataFrame, actions: DataFrame,
+                            cfg: Config, receiptGate: Column): DataFrame =
+    if (receipts.isStreaming) keyedJoin(receipts, outcomes, actions, cfg, receiptGate)
+    else joined(dedupReceipts(receipts, cfg), dedupOutcomes(outcomes, cfg),
+                dedupActions(actions, cfg), cfg)
 
   // ------------------------------------- filter + project + fan-out (#7, #8, #9)
 
@@ -122,7 +254,10 @@ object TokenPipeline {
     * are negated (BigDecimal.negate in the reference).
     */
   def transfers(roa: DataFrame, cfg: Config): DataFrame =
-    transfersFiltered(roa, col("receiver_account_id") === lit(cfg.tokenAddress))
+    transfersFiltered(roa, tokenGate(cfg))
+
+  private def tokenGate(cfg: Config): Column =
+    col("receiver_account_id") === lit(cfg.tokenAddress)
 
   /** Multi-tenant variant: every token contract in ONE plan. The reference
     * deploys one Kafka Streams app per token (the address is boot config,
@@ -229,10 +364,7 @@ object TokenPipeline {
   /** End-to-end: raw CDC frames → transfer legs. */
   def transfersFromRaw(receipts: DataFrame, outcomes: DataFrame, actions: DataFrame,
                        cfg: Config): DataFrame =
-    transfers(
-      joined(dedupReceipts(receipts, cfg), dedupOutcomes(outcomes, cfg),
-             dedupActions(actions, cfg), cfg),
-      cfg)
+    transfers(joinedFromRaw(receipts, outcomes, actions, cfg, tokenGate(cfg)), cfg)
 
   /** End-to-end: raw CDC frames → per-account balances. */
   def balancesFromRaw(receipts: DataFrame, outcomes: DataFrame, actions: DataFrame,
@@ -245,6 +377,5 @@ object TokenPipeline {
   def multiTokenBalancesFromRaw(receipts: DataFrame, outcomes: DataFrame,
                                 actions: DataFrame, cfg: Config): DataFrame =
     balancesByToken(transfersAllTokens(
-      joined(dedupReceipts(receipts, cfg), dedupOutcomes(outcomes, cfg),
-             dedupActions(actions, cfg), cfg)))
+      joinedFromRaw(receipts, outcomes, actions, cfg, lit(true))))
 }

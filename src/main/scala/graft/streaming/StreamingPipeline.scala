@@ -11,25 +11,32 @@ import graft.sinks.BalanceUpsert
 /** Structured-Streaming execution of the token pipeline — the reference's
   * actual execution model (reference: TokenBalance.java:92-122,279-333).
   *
-  * The pipeline stages in [[TokenPipeline]] are pure `DataFrame => DataFrame`
-  * and dispatch on `isStreaming` only inside [[graft.operators.Dedup]], so the
-  * SAME plan runs in batch (backfill/replay) and streaming; the parity suite
-  * asserts stream ≡ batch on the fixture feed. Under streaming:
+  * [[TokenPipeline.transfersFromRaw]] dispatches once on `isStreaming`: batch
+  * (backfill/replay) runs `Dedup.exact` ×3 and two Catalyst joins, streaming
+  * runs one keyed state per receipt, and the filter, fan-out and balance fold
+  * are shared. The parity suite asserts stream ≡ batch on the fixture feed,
+  * with skewed topics, and on the sf0.001 feed. Under streaming:
   *
-  *   - dedup (#3) becomes `withWatermark` + `dropDuplicatesWithinWatermark`
-  *     (keep-first, bounded state — the RocksDB window store analogue);
-  *   - the two ±2 s joins (#4, #5) become watermarked stream-stream interval
-  *     joins with bounded join state;
-  *   - the balance fold (#13/#14) cannot be an unbounded streaming aggregate
-  *     after a stream-stream join in one plan (unsupported combination), so it
-  *     runs as the Spark-idiomatic equivalent of the reference's
-  *     KTable→JDBC-upsert pair: per micro-batch, aggregate the batch's
-  *     transfers into per-account deltas and merge them into the idempotent
-  *     upsert sink ([[BalanceUpsert]]) — the running state lives in the sink,
-  *     exactly where the reference's Postgres table ends up.
+  *   - dedup (#3) and the two ±2 s joins (#4, #5) are ONE
+  *     `flatMapGroupsWithState` keyed by `receipt_id` over a tagged union of
+  *     the three topics, each input with its own `withWatermark`: it keeps
+  *     the first receipt, outcome and action per index, emits each joined
+  *     triple once when its last part arrives, and drops the key's state by
+  *     event-time timeout (max event time + dedup delay). One stateful
+  *     operator means one state store per partition to load and commit per
+  *     trigger, behind one shuffle;
+  *   - the balance fold (#13/#14) runs as the Spark-idiomatic equivalent of
+  *     the reference's KTable→JDBC-upsert pair: per micro-batch, aggregate the
+  *     batch's transfers into per-account deltas and merge them into the
+  *     idempotent upsert sink ([[BalanceUpsert]]) — the running state lives in
+  *     the sink, exactly where the reference's Postgres table ends up.
   *
   * Reset/replay (#17): wipe `checkpointLocation` and the sink, restart from
-  * earliest — deterministic replay is asserted by the parity suite.
+  * earliest — deterministic replay is asserted by the parity suite. It is
+  * also the upgrade path across a change of the state layout: a checkpoint
+  * written by the earlier dedup + join plan cannot be resumed (the query
+  * fails with `STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA`
+  * before any batch commits), so reset and replay from earliest.
   */
 object StreamingPipeline {
 
@@ -39,7 +46,9 @@ object StreamingPipeline {
   def parseJson(raw: DataFrame, schema: StructType): DataFrame =
     raw.select(from_json(col("value"), schema).as("r")).select("r.*")
 
-  /** The transfer stream: identical call as batch — stages self-dispatch. */
+  /** The transfer stream: the same call as batch; [[TokenPipeline]] picks the
+    * keyed-state operator for streaming inputs.
+    */
   def transfers(receipts: DataFrame, outcomes: DataFrame, actions: DataFrame,
                 cfg: TokenPipeline.Config): DataFrame =
     TokenPipeline.transfersFromRaw(receipts, outcomes, actions, cfg)
@@ -51,7 +60,8 @@ object StreamingPipeline {
     *
     * Valid when the input is already a transfer stream (e.g. consumed from
     * the transfers topic, the reference's own topology split): Spark cannot
-    * place an unbounded aggregate after a stream-stream join in one plan —
+    * place an update-mode aggregate after another stateful operator (here
+    * the keyed dedup + join state) in one plan —
     * for the fused single-plan variant use [[dualSink]], which keeps the
     * running state in the sink instead. Start the returned writer with
     * `.start()` after adding sink options; pair with the reference's RocksDB

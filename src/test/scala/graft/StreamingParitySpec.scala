@@ -15,9 +15,10 @@ import graft.streaming.StreamingPipeline
   * the same stages run unchanged under Structured Streaming is proven here,
   * not asserted in comments:
   *
-  *   - the transfer stream (watermarked dedup → two interval joins → fan-out)
-  *     fed in multiple micro-batches, with CDC duplicates crossing the batch
-  *     boundary, must equal the batch result;
+  *   - the transfer stream (one keyed state per receipt → fan-out) fed in
+  *     multiple micro-batches, with CDC duplicates crossing the batch
+  *     boundary and topics skewed against each other, must equal the batch
+  *     result (dedup → two interval joins → fan-out);
   *   - the balance changelog via per-batch deltas merged into the upsert
   *     store must equal the batch aggregate;
   *   - a full reset + replay (fresh checkpoint, fresh store, same feed) must
@@ -29,12 +30,15 @@ class StreamingParitySpec extends SparkSpec {
 
   /** Feed three MemoryStreams with the given JSON feeds in `nChunks` pieces,
     * run the full pipeline, return (collected transfer rows, balance store).
+    * `skew` delays each topic's chunks by that many micro-batches
+    * (receipts, outcomes, actions).
     */
   private def runStreaming(name: String, nChunks: Int,
                            feeds: (Seq[String], Seq[String], Seq[String]) =
                              (TokenFixture.receipts(spark).toJSON.collect().toSeq,
                               TokenFixture.outcomes(spark).toJSON.collect().toSeq,
-                              TokenFixture.actions(spark).toJSON.collect().toSeq))
+                              TokenFixture.actions(spark).toJSON.collect().toSeq),
+                           skew: (Int, Int, Int) = (0, 0, 0))
       : (Set[String], Map[String, BalanceUpsert.BalanceRow]) = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -69,11 +73,11 @@ class StreamingParitySpec extends SparkSpec {
       xs.grouped(size).toSeq
     }
     val feed = (chunks(rJson), chunks(oJson), chunks(aJson))
-    val n = Seq(feed._1.size, feed._2.size, feed._3.size).max
+    val n = Seq(feed._1.size + skew._1, feed._2.size + skew._2, feed._3.size + skew._3).max
     (0 until n).foreach { i =>
-      feed._1.lift(i).foreach(c => rIn.addData(c))
-      feed._2.lift(i).foreach(c => oIn.addData(c))
-      feed._3.lift(i).foreach(c => aIn.addData(c))
+      feed._1.lift(i - skew._1).foreach(c => rIn.addData(c))
+      feed._2.lift(i - skew._2).foreach(c => oIn.addData(c))
+      feed._3.lift(i - skew._3).foreach(c => aIn.addData(c))
       query.processAllAvailable()
     }
     query.stop()
@@ -106,6 +110,19 @@ class StreamingParitySpec extends SparkSpec {
     }
   }
 
+  test("topic skew: actions a micro-batch early, outcomes a micro-batch late") {
+    // the keyed state must buffer each part until the last of its receipt's
+    // three parts arrives, whichever topic that is
+    val (streamed, store) = runStreaming("tx_skew", nChunks = 3, skew = (1, 2, 0))
+    assert(streamed === canonical(batchTransfers))
+    val batch = TokenPipeline.balances(batchTransfers).collect()
+      .map(BalanceUpsert.BalanceRow.fromRow).map(b => b.account -> b.balance).toMap
+    assert(store.keySet === batch.keySet)
+    batch.foreach { case (acct, b) =>
+      assert(store(acct).balance.compareTo(b) == 0, s"balance of $acct")
+    }
+  }
+
   test("reset + replay reproduces identical results (deterministic recovery)") {
     val (t1, s1) = runStreaming("tx_replay_1", nChunks = 2)
     val (t2, s2) = runStreaming("tx_replay_2", nChunks = 4)
@@ -124,7 +141,7 @@ class StreamingParitySpec extends SparkSpec {
     * the same checkpoint, and Structured Streaming re-runs the batch with
     * the SAME batchId — the journaled store's claim fails and it skips the
     * replay, while a plain at-least-once store visibly double-applies the
-    * same deltas. End-to-end over the full pipeline (dedup → interval joins
+    * same deltas. End-to-end over the full pipeline (keyed dedup + joins
     * → fan-out → per-batch balance fold), not a unit call of the protocol.
     */
   test("checkpoint-restart redelivery: journaled store exactly-once, plain store double-applies") {
@@ -263,10 +280,10 @@ class StreamingParitySpec extends SparkSpec {
     * must reproduce the batch transfer set exactly. The feed is time-ordered,
     * so watermarks genuinely advance between chunks — the late re-appended
     * duplicates are evicted/deduped by the watermark exactly as batch dedup
-    * removes them, and join state is actually bounded during the run (unlike
+    * removes them, and keyed state actually times out during the run (unlike
     * the fixture, whose span never moves the watermark).
     */
-  test("sf0.001 synthetic feed: streaming equals batch across 4 micro-batches") {
+  private def sfParity(name: String): Unit = {
     import graft.sources.{SyntheticCdc, Tables}
     val base = SyntheticCdc.base(Tables(spark, "/root/testdata/sf0.001", "events")).cache()
     try {
@@ -282,7 +299,7 @@ class StreamingParitySpec extends SparkSpec {
         feed(SyntheticCdc.receiptsWithDups(base), "included_in_block_timestamp"),
         feed(SyntheticCdc.outcomesWithDups(base), "executed_in_block_timestamp"),
         feed(SyntheticCdc.actionsWithDups(base), "receipt_included_in_block_timestamp"))
-      val (streamed, store) = runStreaming("sf_parity", nChunks = 4, feeds)
+      val (streamed, store) = runStreaming(name, nChunks = 4, feeds)
       val batch = canonical(TokenPipeline.transfersFromRaw(
         SyntheticCdc.receiptsWithDups(base),
         SyntheticCdc.outcomesWithDups(base),
@@ -292,5 +309,26 @@ class StreamingParitySpec extends SparkSpec {
       assert(streamed === batch)
       assert(store.nonEmpty)
     } finally { base.unpersist(); () }
+  }
+
+  test("sf0.001 synthetic feed: streaming equals batch across 4 micro-batches") {
+    sfParity("sf_parity")
+  }
+
+  /** The same parity on the RocksDB state-store provider (the reference's
+    * backend, see RocksDbStateSpec): the keyed state's struct and array
+    * state and its event-time timeouts must ride the provider unchanged.
+    * The provider is read at query start and restored for the shared session.
+    */
+  test("sf0.001 synthetic feed on the RocksDB state store equals batch") {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val previous = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try sfParity("sf_parity_rocksdb")
+    finally previous match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }
